@@ -445,53 +445,40 @@ def _schema_json_from_ddl(
 
 # ---- checkpointing ----------------------------------------------------
 
-_CHECKPOINT_SCHEMA = """
-    protocol struct<
-        minReaderVersion:int,
-        minWriterVersion:int,
-        readerFeatures:array<string>,
-        writerFeatures:array<string>
-    >,
-    metaData struct<
-        id:string,
-        format:struct<provider:string, options:map<string,string>>,
-        schemaString:string,
-        partitionColumns:array<string>,
-        configuration:map<string,string>,
-        createdTime:bigint
-    >,
-    add struct<
-        path:string,
-        partitionValues:map<string,string>,
-        size:bigint,
-        modificationTime:bigint,
-        dataChange:boolean,
-        deletionVector:struct<
-            storageType:string,
-            pathOrInlineDv:string,
-            offset:int,
-            sizeInBytes:int,
-            cardinality:bigint
-        >,
-        baseRowId:bigint,
-        defaultRowCommitVersion:bigint
-    >,
-    remove struct<
-        path:string,
-        deletionTimestamp:bigint,
-        dataChange:boolean
-    >,
-    txn struct<
-        appId:string,
-        version:bigint,
-        lastUpdated:bigint
-    >,
-    domainMetadata struct<
-        domain:string,
-        configuration:string,
-        removed:boolean
-    >
-"""
+def _checkpoint_arrow_schema():
+    """The checkpoint parquet schema: one nullable struct column per
+    action kind (PROTOCOL.md checkpoint format), in the Arrow form
+    pyarrow writes each part from."""
+    import pyarrow as pa
+
+    s, i32, i64, b = pa.string(), pa.int32(), pa.int64(), pa.bool_()
+    smap, slist = pa.map_(s, s), pa.list_(s)
+
+    def st(**fields):
+        return pa.struct(list(fields.items()))
+
+    return pa.schema({
+        "protocol": st(
+            minReaderVersion=i32, minWriterVersion=i32,
+            readerFeatures=slist, writerFeatures=slist,
+        ),
+        "metaData": st(
+            id=s, format=st(provider=s, options=smap), schemaString=s,
+            partitionColumns=slist, configuration=smap, createdTime=i64,
+        ),
+        "add": st(
+            path=s, partitionValues=smap, size=i64, modificationTime=i64,
+            dataChange=b,
+            deletionVector=st(
+                storageType=s, pathOrInlineDv=s, offset=i32,
+                sizeInBytes=i32, cardinality=i64,
+            ),
+            baseRowId=i64, defaultRowCommitVersion=i64,
+        ),
+        "remove": st(path=s, deletionTimestamp=i64, dataChange=b),
+        "txn": st(appId=s, version=i64, lastUpdated=i64),
+        "domainMetadata": st(domain=s, configuration=s, removed=b),
+    })
 
 
 # Max action rows per checkpoint parquet: above this the classic
@@ -526,12 +513,21 @@ def write_delta_checkpoint(
     says checkpoints carry the COMPLETE replay state, so a spec
     reader that starts from the checkpoint after ``cleanup_log`` must
     still see tombstones and per-appId exactly-once state) plus the
-    ``_last_checkpoint`` pointer."""
+    ``_last_checkpoint`` pointer. ``policy`` picks the layout: the
+    single file, the spec multi-part split above
+    ``_CHECKPOINT_PART_MAX`` rows, or ``"v2"`` (JSON manifest plus
+    ``_sidecars/*.parquet``).
+
+    Every parquet part is built in the driver by pyarrow from
+    ``_checkpoint_arrow_schema`` and published with
+    ``_write_file_atomic``, the put-if-absent the log entries use:
+    no Spark job, no Python-row DataFrame, no temporary directory.
+    Readers read checkpoints with pyarrow too (``_LogDir``)."""
     from etl_deltalake_spark.sources.versioned import (
-        _fs,
         _write_file_atomic,
         _write_file_overwrite,
     )
+    from urllib.parse import quote as _q
 
     millis = _iso_to_millis(timestamp)
     meta = metadata_action(
@@ -540,102 +536,73 @@ def write_delta_checkpoint(
     )["metaData"]
     mrv, mwv = protocol or (1, 2)
     rfeats, wfeats = features or (None, None)
-    rows = [
-        ((mrv, mwv, rfeats, wfeats), None, None, None, None, None),
-        (
-            None,
-            (
-                meta["id"],
-                ("parquet", {}),
-                meta["schemaString"],
-                meta["partitionColumns"],
-                meta["configuration"],
-                millis,
-            ),
-            None,
-            None,
-            None,
-            None,
-        ),
-    ]
-    for domain in sorted(domains or {}):
+    rows: list[dict] = [
+        {"protocol": {
+            "minReaderVersion": mrv, "minWriterVersion": mwv,
+            "readerFeatures": rfeats, "writerFeatures": wfeats,
+        }},
+        {"metaData": meta},
         # live metadata domains survive log cleanup through the
         # checkpoint's domainMetadata rows (PROTOCOL.md: checkpoints
         # carry the latest non-removed domainMetadata per domain)
-        rows.append(
-            (
-                None, None, None, None, None,
-                (domain, domains[domain], False),
-            )
-        )
-    from urllib.parse import quote as _q
-
+        *(
+            {"domainMetadata": {
+                "domain": d, "configuration": domains[d], "removed": False,
+            }}
+            for d in sorted(domains or {})
+        ),
+    ]
     for rel in live:
         dv = (dvs or {}).get(rel)
-        dv_row = (
-            (
-                dv["storageType"],
-                dv["pathOrInlineDv"],
-                int(dv["offset"]),
-                int(dv["sizeInBytes"]),
-                int(dv["cardinality"]),
-            )
-            if dv is not None
-            else None
-        )
         rid = (row_ids or {}).get(rel)
-        rows.append(
-            (
-                None,
-                None,
-                (
-                    # same percent-encoding as the JSON log — replay
-                    # joins checkpoint and tail by path STRING
-                    _q(rel, safe="/="),
-                    partition_values_from_path(rel),
-                    _file_size(spark, table_path, rel),
-                    millis,
-                    True,
-                    dv_row,
-                    int(rid[0]) if rid is not None else None,
-                    int(rid[1]) if rid is not None else None,
-                ),
-                None,
-                None,
-                None,
-            )
-        )
-    for rel, del_ts in sorted(tombstones or []):
-        rows.append(
-            (None, None, None, (_q(rel, safe="/="), del_ts, True),
-             None, None)
-        )
-    for app_id in sorted(txns or {}):
-        rows.append(
-            (None, None, None, None,
-             (app_id, int(txns[app_id]), millis), None)
-        )
-    jvm, fs, _ = _fs(spark, table_path)
+        rows.append({"add": {
+            # same percent-encoding as the JSON log — replay joins
+            # checkpoint and tail by path STRING
+            "path": _q(rel, safe="/="),
+            "partitionValues": partition_values_from_path(rel),
+            "size": _file_size(spark, table_path, rel),
+            "modificationTime": millis,
+            "dataChange": True,
+            "deletionVector": dv and {
+                "storageType": dv["storageType"],
+                "pathOrInlineDv": dv["pathOrInlineDv"],
+                **{k: int(dv[k]) for k in (
+                    "offset", "sizeInBytes", "cardinality"
+                )},
+            },
+            "baseRowId": rid and int(rid[0]),
+            "defaultRowCommitVersion": rid and int(rid[1]),
+        }})
+    rows += [
+        {"remove": {
+            "path": _q(rel, safe="/="), "deletionTimestamp": del_ts,
+            "dataChange": True,
+        }}
+        for rel, del_ts in sorted(tombstones or [])
+    ]
+    rows += [
+        {"txn": {
+            "appId": a, "version": int(txns[a]), "lastUpdated": millis,
+        }}
+        for a in sorted(txns or {})
+    ]
+    schema = _checkpoint_arrow_schema()
 
-    def _emit(chunk, final_name: str) -> bool:
-        df = spark.createDataFrame(
-            chunk, schema=_CHECKPOINT_SCHEMA
-        ).coalesce(1)
-        tmp_dir = f"{table_path}/{_DELTA_DIR}/_tmp_ckpt_{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(tmp_dir)
-        part = next(
-            str(st.getPath())
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(tmp_dir))
-            if st.getPath().getName().startswith("part-")
+    def _emit(chunk, final_name: str) -> int | None:
+        """Write one part with pyarrow and publish it put-if-absent;
+        its byte size, or None when another writer published it."""
+        import io
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        buf = io.BytesIO()
+        pq.write_table(pa.Table.from_pylist(chunk, schema=schema), buf)
+        payload = buf.getvalue()
+        ok = _write_file_atomic(
+            spark, f"{table_path}/{_DELTA_DIR}/{final_name}", payload
         )
-        ok = fs.rename(
-            jvm.org.apache.hadoop.fs.Path(part),
-            jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{_DELTA_DIR}/{final_name}"
-            ),
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_dir), True)
-        return ok
+        return len(payload) if ok else None
 
     v20 = f"{delta_version:0{_VERSION_DIGITS}d}"
     pointer: dict = {"version": delta_version, "size": len(rows)}
@@ -649,10 +616,7 @@ def write_delta_checkpoint(
         # spec. Scale story: sidecars shard file actions without the
         # multi-part layout's fixed part count, and the manifest stays
         # tiny however many files the table holds.
-        side_rows = [r for r in rows if r[2] is not None or r[3] is not None]
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/{_DELTA_DIR}/_sidecars"
-        ))
+        side_rows = [r for r in rows if "add" in r or "remove" in r]
         # shard file actions by _CHECKPOINT_PART_MAX — same bound as
         # the classic multi-part layout; one unbounded sidecar would
         # re-create the single-file bottleneck v2 exists to avoid
@@ -664,34 +628,14 @@ def write_delta_checkpoint(
         sidecar_actions: list[dict] = []
         for chunk in chunks:
             side_name = f"{uuid.uuid4().hex}.parquet"
-            df = spark.createDataFrame(
-                chunk, schema=_CHECKPOINT_SCHEMA
-            ).coalesce(1)
-            tmp_dir = (
-                f"{table_path}/{_DELTA_DIR}/_tmp_ckpt_{uuid.uuid4().hex}"
-            )
-            df.write.mode("overwrite").parquet(tmp_dir)
-            part = next(
-                str(st.getPath())
-                for st in fs.listStatus(
-                    jvm.org.apache.hadoop.fs.Path(tmp_dir)
-                )
-                if st.getPath().getName().startswith("part-")
-            )
-            side_final = jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{_DELTA_DIR}/_sidecars/{side_name}"
-            )
-            ok = fs.rename(jvm.org.apache.hadoop.fs.Path(part), side_final)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_dir), True)
-            if not ok:
+            size = _emit(chunk, f"_sidecars/{side_name}")
+            if size is None:
                 return
             sidecar_actions.append(
                 {
                     "sidecar": {
                         "path": side_name,
-                        "sizeInBytes": int(
-                            fs.getFileStatus(side_final).getLen()
-                        ),
+                        "sizeInBytes": size,
                         "modificationTime": millis,
                     }
                 }
@@ -739,7 +683,7 @@ def write_delta_checkpoint(
             )
         return
     if len(rows) <= _CHECKPOINT_PART_MAX:
-        renamed = _emit(rows, f"{v20}.checkpoint.parquet")
+        published = _emit(rows, f"{v20}.checkpoint.parquet") is not None
     else:
         # MULTI-PART checkpoint (round 12, PROTOCOL.md classic-sharded
         # form %020d.checkpoint.%010d.%010d.parquet): at 100 TB a live
@@ -749,17 +693,17 @@ def write_delta_checkpoint(
         # are a pure row-split; replay order within a checkpoint is
         # irrelevant (it is complete state, not a log).
         n_parts = -(-len(rows) // _CHECKPOINT_PART_MAX)
-        renamed = True
+        published = True
         for i in range(n_parts):
             chunk = rows[
                 i * _CHECKPOINT_PART_MAX : (i + 1) * _CHECKPOINT_PART_MAX
             ]
-            renamed = renamed and _emit(
+            published = published and _emit(
                 chunk,
                 f"{v20}.checkpoint.{i + 1:010d}.{n_parts:010d}.parquet",
-            )
+            ) is not None
         pointer["parts"] = n_parts
-    if renamed:  # raced writers: first one wins, pointer follows
+    if published:  # raced writers: first one wins, pointer follows
         _write_file_overwrite(
             spark,
             f"{table_path}/{_DELTA_DIR}/_last_checkpoint",
@@ -1292,6 +1236,8 @@ def delta_history(spark: SparkSession, table_path: str):
     no data files open."""
     import json as _json
 
+    import pyarrow as pa
+
     ts = delta_commit_timestamps(spark, table_path)
     if not ts:
         raise ValueError(f"{table_path} has no _delta_log commits")
@@ -1318,20 +1264,17 @@ def delta_history(spark: SparkSession, table_path: str):
             row["adds"] += 1
         elif a.get("remove") is not None:
             row["removes"] += 1
-    rows = [
-        (
-            v,
-            ts[v],
-            by_v[v]["operation"],
-            by_v[v]["params"],
-            by_v[v]["engine"],
-            by_v[v]["adds"],
-            by_v[v]["removes"],
-        )
-        for v in sorted(by_v, reverse=True)
-    ]
+    vs = sorted(by_v, reverse=True)
     return spark.createDataFrame(
-        rows,
+        pa.table({
+            "version": vs,
+            "timestamp": [ts[v] for v in vs],
+            "operation": [by_v[v]["operation"] for v in vs],
+            "operationParameters": [by_v[v]["params"] for v in vs],
+            "engineInfo": [by_v[v]["engine"] for v in vs],
+            "num_added_files": [by_v[v]["adds"] for v in vs],
+            "num_removed_files": [by_v[v]["removes"] for v in vs],
+        }),
         "version long, timestamp long, operation string, "
         "operationParameters string, engineInfo string, "
         "num_added_files long, num_removed_files long",
@@ -1561,8 +1504,9 @@ def dv_positions(spark: SparkSession, table_path: str, dv: dict) -> list[int]:
 # ``deletionVector`` descriptor. At 100 TB a delete touching 0.1% of
 # rows costs kilobytes of bitmap per file instead of rewriting
 # terabytes — the read-side cost (broadcast anti-join on
-# ``_metadata.row_index``, see ``_scan_with_dv``) is proportional to
-# DV cardinality, and OPTIMIZE materializes the masks away. The
+# ``_metadata.row_index`` against one Arrow relation of decoded
+# positions, see ``dv_mask``; no Python worker runs) is proportional
+# to DV cardinality, and OPTIMIZE materializes the masks away. The
 # encoder below is the production twin of the reader above; the test
 # suite carries a THIRD, independent spec encoder so neither is ever
 # validated only against itself.
@@ -1832,27 +1776,49 @@ def dv_mask(df, fp_col: str, ri_col: str, descs: dict, table_path: str,
     (CDF delete extraction). Two physical strategies, picked from the
     descriptors' summed ``cardinality`` without decoding anything:
 
-    - ≤ ``_DV_BROADCAST_MAX``: driver-side decode + broadcast hash
-      anti/semi-join — all-JVM, whole-stage codegen around it, the
-      right shape for the common small-DV case.
+    - ≤ ``_DV_BROADCAST_MAX``: driver-side decode into ONE Arrow
+      table (numpy int64 positions beside ``_fp_encode``d paths)
+      and a broadcast hash anti/semi-join — the relation reaches the
+      JVM as Arrow batches (a local relation while small), so no
+      Python worker runs and nothing is pickled per row; all-JVM,
+      whole-stage codegen around it.
     - above: per-file decode inside executors behind an Arrow-batched
       boolean ``pandas_udf`` over (file, row_index) only — no shuffle,
       partition-local, driver memory O(#files), the shape that
       survives a 10⁹-row right-to-be-forgotten purge.
+
+    Masks compose: ``dv_mask(dv_mask(s, new, keep="deleted"), old)``
+    is the rows ``new`` masks and ``old`` does not.
     """
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
     total = sum(int(d["cardinality"]) for d in descs.values())
     if total <= _DV_BROADCAST_MAX:
+        import numpy as np
+        import pyarrow as pa
+
+        # descs are keyed by RAW paths; the scan column is Spark's
+        # URI-encoded form — encode the join keys
+        fps = list(descs)
+        pos = [
+            np.asarray(dv_positions(spark, table_path, descs[fp]),
+                       dtype=np.int64)
+            for fp in fps
+        ]
         masked = spark.createDataFrame(
-            [
-                # descs are keyed by RAW paths; the scan column is
-                # Spark's URI-encoded form — encode the join keys
-                (_fp_encode(fp), int(i))
-                for fp, d in descs.items()
-                for i in dv_positions(spark, table_path, d)
-            ],
+            pa.table({
+                fp_col: pa.array(
+                    np.repeat(
+                        np.array([_fp_encode(fp) for fp in fps], dtype=object),
+                        [len(p) for p in pos],
+                    ),
+                    type=pa.string(),
+                ),
+                ri_col: pa.array(
+                    np.concatenate(pos) if pos else np.empty(0, np.int64)
+                ),
+            }),
             schema=f"{fp_col} string, {ri_col} long",
         )
         how = "left_anti" if keep == "live" else "left_semi"
@@ -1868,9 +1834,10 @@ def _scan_with_dv(spark, schema, abs_paths, descs, table_path,
     """Scan parquet files masking DV-deleted rows: files without a DV
     take the plain fast path; files with one read alongside
     ``_metadata.row_index`` (Spark's native per-file row position)
-    and drop masked rows via ``dv_mask`` — broadcast anti-join below
+    and drop masked rows via ``dv_mask`` — broadcast anti-join
+    against an Arrow-built relation (no Python worker) below
     ``_DV_BROADCAST_MAX`` total positions, executor-side decode
-    above it (round 12; nothing O(deleted rows) on the driver).
+    above it (nothing O(deleted rows) on the driver there).
     ``descs`` maps scheme-normalized absolute file path → the add's
     ``deletionVector`` descriptor dict."""
     from pyspark.sql import functions as F

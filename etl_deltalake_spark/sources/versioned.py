@@ -2041,29 +2041,32 @@ class VersionedTable:
                 scan = self._scan_with_position(
                     snap.files, snap.dvs, snap.latest
                 )
-                src_keys = source.select(*key_cols).distinct()
-                hits = scan.join(
-                    src_keys, on=list(key_cols), how="left_semi"
-                ).select("__fp", "__ri")
+                # ONE semi-join of the target against the source keys
+                # feeds the mask, the pre-images and the post/insert
+                # split: a source key is in the table iff it is in
+                # ``matched``, and a null key matches neither
+                matched = scan.join(
+                    source.select(*key_cols).distinct(),
+                    on=list(key_cols), how="left_semi",
+                )
                 cdc_df = None
                 if cdf:
-                    cur_keys = scan.select(*key_cols).distinct()
-                    pre = scan.join(
-                        src_keys, on=list(key_cols), how="left_semi"
-                    ).drop("__fp", "__ri").withColumn(
+                    hit_keys = matched.select(*key_cols).distinct()
+                    pre = matched.drop("__fp", "__ri").withColumn(
                         "_change_type", F.lit("update_preimage")
                     )
                     post = source.join(
-                        cur_keys, on=list(key_cols), how="left_semi"
+                        hit_keys, on=list(key_cols), how="left_semi"
                     ).withColumn(
                         "_change_type", F.lit("update_postimage")
                     )
                     ins = source.join(
-                        cur_keys, on=list(key_cols), how="left_anti"
+                        hit_keys, on=list(key_cols), how="left_anti"
                     ).withColumn("_change_type", F.lit("insert"))
                     cdc_df = pre.unionByName(post).unionByName(ins)
                 version, _n = self._dv_mask_commit(
-                    hits, snap, timestamp, "merge",
+                    matched.select("__fp", "__ri"), snap, timestamp,
+                    "merge",
                     extra_df=source, cdc_df=cdc_df,
                     max_retries=inner_retries,
                     identity_hw=ident_hw or None,
@@ -2256,11 +2259,11 @@ class VersionedTable:
                 f"{base_version}"
             )
 
-        def _positions(desc_json: str) -> set[int]:
-            return set(
-                DL.dv_positions(self.spark, self.path, json.loads(desc_json))
-            )
-
+        def _descs(rels: dict[str, str]) -> dict[str, dict]:
+            return {
+                DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
+                for rel, desc in rels.items()
+            }
 
         def _tag(df, kind, version):
             return df.select(
@@ -2332,60 +2335,22 @@ class VersionedTable:
                 )
             if changed:
                 # rows NEWLY masked by this commit = in the new mask,
-                # not in the old one. Below the broadcast threshold
-                # the exact diff is computed driver-side (bounded);
-                # above it, two executor-side predicates evaluate
-                # (new ∧ ¬old) with no driver materialization.
+                # not in the old one: ``dv_mask`` keeps the new mask's
+                # rows, then drops the old mask's (each picks its
+                # broadcast or executor-side form from cardinality)
                 scan = self._scan_with_position(
                     [f"{self.path}/{f}" for f in changed], {}, c
                 )
-                new_descs = {
-                    DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
-                    for rel, desc in changed.items()
-                }
-                total = sum(
-                    int(d["cardinality"]) for d in new_descs.values()
+                hit = DL.dv_mask(
+                    scan, "__fp", "__ri", _descs(changed), self.path,
+                    keep="deleted",
                 )
-                if total <= DL._DV_BROADCAST_MAX:
-                    sel_rows = [
-                        (
-                            DL._fp_encode(
-                                DL._norm_uri(f"{self.path}/{rel}")
-                            ),
-                            int(i),
-                        )
-                        for rel, desc in changed.items()
-                        for i in sorted(
-                            _positions(desc)
-                            - (
-                                _positions(pre_live[rel])
-                                if pre_live.get(rel)
-                                else set()
-                            )
-                        )
-                    ]
-                    sel = self.spark.createDataFrame(
-                        sel_rows, schema="__fp string, __ri long"
+                old = {f: pre_live[f] for f in changed if pre_live.get(f)}
+                if old:
+                    hit = DL.dv_mask(
+                        hit, "__fp", "__ri", _descs(old), self.path,
+                        keep="live",
                     )
-                    hit = scan.join(
-                        F.broadcast(sel), ["__fp", "__ri"], "left_semi"
-                    )
-                else:
-                    pred = DL._dv_deleted_udf(new_descs, self.path)(
-                        F.col("__fp"), F.col("__ri")
-                    )
-                    old_descs = {
-                        DL._norm_uri(f"{self.path}/{rel}"): json.loads(
-                            pre_live[rel]
-                        )
-                        for rel in changed
-                        if pre_live.get(rel)
-                    }
-                    if old_descs:
-                        pred = pred & ~DL._dv_deleted_udf(
-                            old_descs, self.path
-                        )(F.col("__fp"), F.col("__ri"))
-                    hit = scan.filter(pred)
                 hit = hit.drop("__fp", "__ri")
                 parts.append(
                     _tag(
@@ -2568,6 +2533,36 @@ class VersionedTable:
             "maxColumnId": len(names),
         }
 
+    def _refuse_if_generated_from(
+        self, latest: Commit, props: _Props, column: str, verb: str
+    ) -> None:
+        """Refuse (Delta's rule) when another generated column's
+        expression reads ``column``: it resolves over the schema but
+        not over the schema without ``column`` (Spark's analyzer
+        decides on an empty frame; no job runs)."""
+        from pyspark.errors import AnalysisException
+
+        def resolves(expression: str, skip: str | None) -> bool:
+            try:
+                self.spark.range(0).select(*[
+                    F.lit(None).cast(t).alias(n)
+                    for n, t in latest.schema if n != skip
+                ]).select(F.expr(expression))
+            except AnalysisException:
+                return False
+            return True
+
+        users = sorted(
+            c for c, e in props.generated.items()
+            if c != column
+            and resolves(e, None) and not resolves(e, column)
+        )
+        if users:
+            raise ValueError(
+                f"cannot {verb} {column!r}: the generation expression "
+                f"of {users} references it"
+            )
+
     def rename_column(
         self, old: str, new: str, timestamp: str = "1970-01-01T00:00:00"
     ) -> int:
@@ -2578,7 +2573,9 @@ class VersionedTable:
         changes the logical name in the commit schema. The commit
         carries the spec form (delta.columnMapping.mode=name,
         physicalName + id field metadata, protocol raised to carry
-        the columnMapping feature)."""
+        the columnMapping feature). A generation expression or
+        identity spec moves with the column; like Delta, a column
+        another column's generation expression reads is refused."""
 
         def change(snap: _Snapshot) -> dict:
             latest = snap.latest
@@ -2587,6 +2584,12 @@ class VersionedTable:
                 raise ValueError(f"no column {old!r} (have {names})")
             if new in names:
                 raise ValueError(f"column {new!r} already exists")
+            props = _table_props(snap.state)
+            self._refuse_if_generated_from(latest, props, old, "rename")
+
+            def moved(d: dict) -> dict:
+                return {new if k == old else k: v for k, v in d.items()}
+
             physical = dict(state["physical"])
             phys_old = physical.pop(old, old)
             if new != phys_old:
@@ -2599,6 +2602,12 @@ class VersionedTable:
                 "partition_by": tuple(
                     new if c == old else c for c in latest.partition_by
                 ),
+                "props": replace(
+                    props,
+                    generated=moved(props.generated),
+                    identity=moved(props.identity),
+                    hw=moved(props.hw),
+                ),
             }
 
         return self._alter_commit("rename column", change, timestamp)
@@ -2610,7 +2619,9 @@ class VersionedTable:
         field leaves the schema; data files keep the bytes until
         OPTIMIZE/VACUUM rewrite them; a column later added under the
         same name gets a fresh physical name, so those bytes never
-        resurface."""
+        resurface. The column's generation expression or identity spec
+        goes with it; like Delta, a column another column's generation
+        expression reads is refused."""
 
         def change(snap: _Snapshot) -> dict:
             latest = snap.latest
@@ -2624,6 +2635,12 @@ class VersionedTable:
                     f"{name!r} is a partition column — repartitioning "
                     "the layout is an overwrite's job"
                 )
+            props = _table_props(snap.state)
+            self._refuse_if_generated_from(latest, props, name, "drop")
+
+            def dropped(d: dict) -> dict:
+                return {k: v for k, v in d.items() if k != name}
+
             physical = dict(state["physical"])
             physical.pop(name, None)
             return {
@@ -2631,6 +2648,12 @@ class VersionedTable:
                     (n, t) for n, t in latest.schema if n != name
                 ],
                 "mapping": {**state, "physical": physical},
+                "props": replace(
+                    props,
+                    generated=dropped(props.generated),
+                    identity=dropped(props.identity),
+                    hw=dropped(props.hw),
+                ),
             }
 
         return self._alter_commit("drop column", change, timestamp)

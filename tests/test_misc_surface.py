@@ -408,3 +408,33 @@ def test_one_transaction_log_inventory():
                 props_paths.append(f"{rel}:{node.lineno}: {node.value!r}")
     assert hits == [], f"log paths built outside sources/delta_log.py: {hits}"
     assert props_paths == [], f"_log paths built: {props_paths}"
+
+
+def test_storage_engine_builds_no_python_row_frames():
+    """AST-backed inventory: ``sources/delta_log.py`` and
+    ``sources/versioned.py`` never hand Python rows to
+    ``createDataFrame`` — such a frame runs a Python-worker task
+    wherever it is scanned (the DV mask broadcast, the checkpoint
+    writer). Allowed: an empty typed frame (``[]``) and an Arrow table
+    (``pa.…``), which reach the JVM without a Python worker."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_deltalake_spark"
+    rows: list[str] = []
+    for rel in ("sources/delta_log.py", "sources/versioned.py"):
+        for node in ast.walk(ast.parse((pkg / rel).read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                continue
+            data = node.args[0] if node.args else None
+            empty = isinstance(data, ast.List) and not data.elts
+            arrow = isinstance(data, ast.Call) and ast.unparse(
+                data.func
+            ).startswith("pa.")
+            if not (empty or arrow):
+                rows.append(f"{rel}:{node.lineno}: {ast.unparse(node)[:80]}")
+    assert rows == [], f"createDataFrame of Python rows: {rows}"
