@@ -2259,12 +2259,6 @@ class VersionedTable:
                 f"{base_version}"
             )
 
-        def _descs(rels: dict[str, str]) -> dict[str, dict]:
-            return {
-                DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
-                for rel, desc in rels.items()
-            }
-
         def _tag(df, kind, version):
             return df.select(
                 "*",
@@ -2342,14 +2336,14 @@ class VersionedTable:
                     [f"{self.path}/{f}" for f in changed], {}, c
                 )
                 hit = DL.dv_mask(
-                    scan, "__fp", "__ri", _descs(changed), self.path,
-                    keep="deleted",
+                    scan, "__fp", "__ri", self._dv_descs(changed),
+                    self.path, keep="deleted",
                 )
                 old = {f: pre_live[f] for f in changed if pre_live.get(f)}
                 if old:
                     hit = DL.dv_mask(
-                        hit, "__fp", "__ri", _descs(old), self.path,
-                        keep="live",
+                        hit, "__fp", "__ri", self._dv_descs(old),
+                        self.path, keep="live",
                     )
                 hit = hit.drop("__fp", "__ri")
                 parts.append(
@@ -2441,6 +2435,17 @@ class VersionedTable:
         return df.select(
             *[F.col(p).alias(n) for n, p, _ in pairs], "_change_type"
         )
+
+    def _dv_descs(self, dvs: dict[str, str]) -> dict[str, dict]:
+        """``dvs`` (table-relative path → descriptor JSON) keyed the way
+        ``delta_log.dv_mask`` wants: scheme-normalized absolute path →
+        parsed descriptor."""
+        from etl_deltalake_spark.sources import delta_log as DL
+
+        return {
+            DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
+            for rel, desc in dvs.items()
+        }
 
     def _phys_pairs(self, latest: Commit) -> list[tuple[str, str, str]]:
         """[(logical, physical, ddl type)] under the commit's mapping
@@ -2672,13 +2677,9 @@ class VersionedTable:
             f"{self.path}/{_DATA_DIR}" if latest.partition_by else None
         )
         if dvs:
-            dv_map = {
-                DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
-                for rel, desc in dvs.items()
-            }
             df = DL._scan_with_dv(
-                self.spark, phys_ddl, files, dv_map, self.path,
-                base_path=base,
+                self.spark, phys_ddl, files, self._dv_descs(dvs),
+                self.path, base_path=base,
             )
         else:
             reader = self.spark.read.schema(phys_ddl)
@@ -2717,12 +2718,9 @@ class VersionedTable:
             F.col("_metadata.row_index").alias("__ri"),
         )
         if dvs:
-            descs = {
-                DL._norm_uri(f"{self.path}/{rel}"): json.loads(desc)
-                for rel, desc in dvs.items()
-            }
             df = DL.dv_mask(
-                df, "__fp", "__ri", descs, self.path, keep="live"
+                df, "__fp", "__ri", self._dv_descs(dvs), self.path,
+                keep="live",
             )
         return df
 
