@@ -22,6 +22,8 @@ keep everything in whole-stage codegen.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -461,6 +463,65 @@ def minhash_near_dup_pairs(
     )
 
 
+# Edge lists up to this many rows are solved on the driver: one Arrow
+# collect, a numpy kernel and a local relation, where each Spark round
+# would cost a job. The constant bounds the only driver-side edge
+# materialization (cf. ``delta_log._DV_BROADCAST_MAX``).
+_LOCAL_GRAPH_MAX_EDGES = 1_000_000
+
+
+def _small_graph(edges: DataFrame):
+    """``edges`` (lazily checkpointed) as an Arrow table, or None above
+    the bound; either way the collect materializes the checkpoint."""
+    tab = edges.limit(_LOCAL_GRAPH_MAX_EDGES + 1).toArrow()
+    return tab if tab.num_rows <= _LOCAL_GRAPH_MAX_EDGES else None
+
+
+def _local_min_labels(spark, tab, nullable: bool, iterations: int | None):
+    """Min-label propagation over the Arrow edge list ``tab`` on the
+    driver, returned as a (doc, cluster) local relation. Ids are
+    factorized to ranks of their sorted distinct values, so the
+    minimum rank is the minimum id for any orderable type. K rounds
+    are the synchronous Spark rounds (early exit, no shortcut);
+    ``iterations=None`` also pointer-jumps to the exact component
+    minima in O(log n) passes. A null id links nothing and keeps the
+    Spark rounds' (null, null) row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    a, b = tab.column(0), tab.column(1)
+    both = pa.chunked_array(a.chunks + b.chunks, type=a.type)
+    ids = pc.unique(both).drop_null()
+    ids = ids.take(pc.sort_indices(ids))
+    ia, ib = pc.index_in(a, value_set=ids), pc.index_in(b, value_set=ids)
+    linked = pc.and_(pc.is_valid(ia), pc.is_valid(ib))
+    u = ia.filter(linked).to_numpy().astype(np.int64)
+    v = ib.filter(linked).to_numpy().astype(np.int64)
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    lab = np.arange(len(ids), dtype=np.int64)
+    rounds = itertools.count() if iterations is None else range(iterations)
+    for _ in rounds:
+        new = lab.copy()
+        np.minimum.at(new, src, lab[dst])
+        if iterations is None:
+            new = new[new]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    docs, clusters = ids, ids.take(pa.array(lab))
+    if both.null_count:
+        docs = pa.concat_arrays([docs, pa.nulls(1, ids.type)])
+        clusters = pa.concat_arrays([clusters, pa.nulls(1, ids.type)])
+    schema = pa.schema([
+        pa.field("doc", ids.type, nullable),
+        pa.field("cluster", ids.type, nullable),
+    ])
+    return spark.createDataFrame(
+        pa.Table.from_arrays([docs, clusters], schema=schema)
+    )
+
+
 def label_propagation_clusters(
     pairs: DataFrame,
     left_col: str = "doc_a",
@@ -472,10 +533,7 @@ def label_propagation_clusters(
     iterative-algorithm building block a dedup pipeline needs to turn
     pairwise matches into groups (keep one doc per cluster).
     ``iterations=None`` runs UNTIL FIXPOINT — exact connected
-    components at any diameter (min-label propagation converges in
-    O(diameter) rounds; the early-exit check below doubles as the
-    termination test, so the unbounded mode costs exactly
-    diameter+1 rounds).
+    components at any diameter.
 
     label_{i+1}(v) = min(label_i(v), min over neighbors label_i(u));
     after K rounds every node holds the min doc id within K hops —
@@ -485,23 +543,29 @@ def label_propagation_clusters(
     (a run that converges early equals the fully-unrolled SQL: once
     no label changes, further rounds are identity).
 
-    Scale: each round is one join + groupBy on the edge list (shuffle
-    on node id); edges are localCheckpointed once so the (possibly
-    expensive) pair-generation plan runs once, and labels are
-    checkpointed per round to truncate the iterative lineage —
-    the standard Spark iterative-graph pattern. Rounds after
-    convergence are SKIPPED: the per-round changed-flag scan costs
-    one pass over the (node-count-sized, checkpointed) label table,
-    while a wasted round costs a full edge join — at 100 TB the
-    early exit is the difference between diameter(graph) rounds and
-    always-K rounds.
+    Scale: a pair list within ``_LOCAL_GRAPH_MAX_EDGES`` is collected
+    once and solved on the driver by the same rounds
+    (``_local_min_labels``) — one job, where each Spark round costs
+    several. Above it the rounds run in Spark over the pairs that
+    collect checkpointed: one join + groupBy on the edge list per
+    round, labels checkpointed per round, and rounds after convergence
+    skipped (so ``iterations=None`` costs diameter+1 rounds).
 
     Output: (doc, cluster) — cluster is the propagated min label.
     """
+    probe = pairs.select(
+        F.col(left_col).alias("src"), F.col(right_col).alias("dst")
+    ).localCheckpoint(eager=False)
+    ts, td = probe.schema.fields
+    # mixed id types widen in the Spark rounds' union
+    tab = _small_graph(probe) if ts.dataType == td.dataType else None
+    if tab is not None:
+        return _local_min_labels(
+            pairs.sparkSession, tab, ts.nullable or td.nullable, iterations
+        )
     edges = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(right_col).alias("src"), F.col(left_col).alias("dst"))
+        probe.unionByName(
+            probe.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         # LAZY checkpoint (round 15): round 1's convergence count
         # materializes it — the standalone edge-materialization job
@@ -511,8 +575,6 @@ def label_propagation_clusters(
     labels = edges.select(F.col("src").alias("doc")).distinct().withColumn(
         "label", F.col("doc")
     )
-    import itertools
-
     rounds = itertools.count() if iterations is None else range(iterations)
     for _ in rounds:
         nbr = (
@@ -1021,10 +1083,11 @@ def incremental_neardup(
                   canonical member is itself a history dup dies with
                   it: its content is already represented in history.
 
-    Shuffles: batch signatures aggregate once on doc; the history
-    probe and the in-batch candidates come from ONE fused band-key
-    self-join over tagged batch ∪ history rows (round 15); label
-    propagation runs on the verified (sparse) pair list. Output:
+    Shuffles: batch signatures aggregate once on doc into the
+    checkpointed ``bs``. ``bs ⋈ bs`` on the band key gives the in-batch
+    pairs for ``label_propagation_clusters``; ``bs ⋈ store`` gives the
+    history hits, lazily, over ``store`` as passed — a store from
+    ``write_minhash_store_bucketed`` joins without an Exchange. Output:
     doc, hist_dup, cluster, kept — one row per batch doc, so the
     caller appends ``minhash_store`` rows of kept docs to the store.
     """
@@ -1032,54 +1095,26 @@ def incremental_neardup(
         batch, id_col, text_col, k, num_perm, bands
     ).localCheckpoint(eager=True)
 
-    # ONE band-key self-join over batch ∪ history rows (round 15,
-    # guide §2.4/§3 — VERDICT r14 #3): the history probe and the
-    # in-batch candidate join key identically on (band_idx,
-    # band_hash), so tagging each side and joining the union once
-    # replaces two joins (three shuffle legs at scale; the union's
-    # exchange is built once and reused for both join sides) with
-    # one, and the verified candidate list — batch-batch pairs AND
-    # history hits — materializes in a single kilobyte-scale
-    # checkpoint instead of the join subtrees re-running per
-    # downstream consumer (label-prop edges probe pairs twice).
-    # Candidate sets, the estimator, and the distincts are unchanged,
-    # so output is bit-identical.
-    probe = bs.select(
-        "doc", "sig", "band_idx", "band_hash", F.lit(False).alias("_hist")
-    )
-    hist = store.select(
-        "doc", "sig", "band_idx", "band_hash", F.lit(True).alias("_hist")
-    )
-    allrows = probe.unionByName(hist)
-    a, b = allrows.alias("a"), allrows.alias("b")
-    verified = (
-        a.join(
-            b,
+    def verified(other: DataFrame, extra: Column = F.lit(True)) -> DataFrame:
+        on = (
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (~F.col("a._hist"))
-            & (F.col("b._hist") | (F.col("a.doc") < F.col("b.doc"))),
+            & extra
         )
-        .filter(
+        return bs.alias("a").join(other.alias("b"), on).filter(
             _est_jaccard(F.col("a.sig"), F.col("b.sig"), num_perm)
             >= threshold
         )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("b._hist").alias("_bh"),
-        )
-        .localCheckpoint(eager=True)
-    )
+
     hist_hits = (
-        verified.filter(F.col("_bh"))
-        .select(F.col("doc_a").alias("doc"))
+        verified(store)
+        .select(F.col("a.doc").alias("doc"))
         .distinct()
         .withColumn("_h", F.lit(True))
     )
     pairs = (
-        verified.filter(~F.col("_bh"))
-        .select("doc_a", "doc_b")
+        verified(bs, F.col("a.doc") < F.col("b.doc"))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
     clusters = label_propagation_clusters(pairs)
@@ -1226,21 +1261,34 @@ def alternating_components(
     (node, parent) order, so the edge set converges to a star forest
     whose centers are the component minima — the same (doc, cluster =
     min id) contract label propagation produces, verified equivalent
-    by test (and by hypothesis over random graphs). Each round is two
-    join+groupBy passes over the current edge set with a checkpoint
-    to truncate lineage; the convergence test (edge-set equality) is
-    one anti-join over the checkpointed edges.
+    by test (and by hypothesis over random graphs).
+
+    Ids cast to long and self-loops drop first. A pair list within
+    ``_LOCAL_GRAPH_MAX_EDGES`` is then solved on the driver from one
+    collect (``_local_min_labels`` to fixpoint: the exact component
+    minima) — the rounds below would cost ~2 jobs each. Above the
+    bound each round is two join+groupBy passes over the current edge
+    set with a checkpoint to truncate lineage; the convergence test
+    (edge-set equality) is one anti-join over the checkpointed edges.
 
     Returns (doc, cluster). ``max_rounds`` is a safety rail, not a
-    tuning knob — convergence raises past it.
+    tuning knob — convergence raises past it (Spark rounds only).
     """
-    edges = (
+    probe = (
         pairs.select(
             F.col(left_col).cast("long").alias("u"),
             F.col(right_col).cast("long").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .select(
+        .localCheckpoint(eager=False)
+    )
+    tab = _small_graph(probe)
+    if tab is not None:
+        # the Spark rounds' output is nullable once a round ran
+        nullable = tab.num_rows > 0 or all(f.nullable for f in probe.schema)
+        return _local_min_labels(pairs.sparkSession, tab, nullable, None)
+    edges = (
+        probe.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()

@@ -2538,13 +2538,13 @@ class VersionedTable:
             "maxColumnId": len(names),
         }
 
-    def _refuse_if_generated_from(
+    def _refuse_if_read_by(
         self, latest: Commit, props: _Props, column: str, verb: str
     ) -> None:
         """Refuse (Delta's rule) when another generated column's
-        expression reads ``column``: it resolves over the schema but
-        not over the schema without ``column`` (Spark's analyzer
-        decides on an empty frame; no job runs)."""
+        expression or a CHECK constraint reads ``column``: it resolves
+        over the schema but not over the schema without ``column``
+        (Spark's analyzer decides on an empty frame; no job runs)."""
         from pyspark.errors import AnalysisException
 
         def resolves(expression: str, skip: str | None) -> bool:
@@ -2557,15 +2557,21 @@ class VersionedTable:
                 return False
             return True
 
+        readers = [
+            (f"the generation expression of {c!r}", e)
+            for c, e in props.generated.items() if c != column
+        ] + [
+            (f"CHECK constraint {n!r}", e)
+            for n, e in props.constraints.items()
+        ]
         users = sorted(
-            c for c, e in props.generated.items()
-            if c != column
-            and resolves(e, None) and not resolves(e, column)
+            who for who, e in readers
+            if resolves(e, None) and not resolves(e, column)
         )
         if users:
             raise ValueError(
-                f"cannot {verb} {column!r}: the generation expression "
-                f"of {users} references it"
+                f"cannot {verb} {column!r}: {'; '.join(users)} "
+                "references it"
             )
 
     def rename_column(
@@ -2578,9 +2584,10 @@ class VersionedTable:
         changes the logical name in the commit schema. The commit
         carries the spec form (delta.columnMapping.mode=name,
         physicalName + id field metadata, protocol raised to carry
-        the columnMapping feature). A generation expression or
-        identity spec moves with the column; like Delta, a column
-        another column's generation expression reads is refused."""
+        the columnMapping feature). A generation expression, identity
+        spec or clustering entry moves with the column; like Delta, a
+        column that another column's generation expression or a CHECK
+        constraint reads is refused."""
 
         def change(snap: _Snapshot) -> dict:
             latest = snap.latest
@@ -2590,7 +2597,7 @@ class VersionedTable:
             if new in names:
                 raise ValueError(f"column {new!r} already exists")
             props = _table_props(snap.state)
-            self._refuse_if_generated_from(latest, props, old, "rename")
+            self._refuse_if_read_by(latest, props, old, "rename")
 
             def moved(d: dict) -> dict:
                 return {new if k == old else k: v for k, v in d.items()}
@@ -2612,6 +2619,9 @@ class VersionedTable:
                     generated=moved(props.generated),
                     identity=moved(props.identity),
                     hw=moved(props.hw),
+                    clustering=tuple(
+                        new if c == old else c for c in props.clustering
+                    ),
                 ),
             }
 
@@ -2625,8 +2635,9 @@ class VersionedTable:
         OPTIMIZE/VACUUM rewrite them; a column later added under the
         same name gets a fresh physical name, so those bytes never
         resurface. The column's generation expression or identity spec
-        goes with it; like Delta, a column another column's generation
-        expression reads is refused."""
+        goes with it; like Delta, a clustering column, or a column that
+        another column's generation expression or a CHECK constraint
+        reads, is refused."""
 
         def change(snap: _Snapshot) -> dict:
             latest = snap.latest
@@ -2641,7 +2652,12 @@ class VersionedTable:
                     "the layout is an overwrite's job"
                 )
             props = _table_props(snap.state)
-            self._refuse_if_generated_from(latest, props, name, "drop")
+            if name in props.clustering:
+                raise ValueError(
+                    f"{name!r} is a clustering column — change the "
+                    "clustering (set_clustering) before dropping it"
+                )
+            self._refuse_if_read_by(latest, props, name, "drop")
 
             def dropped(d: dict) -> dict:
                 return {k: v for k, v in d.items() if k != name}

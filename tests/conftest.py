@@ -217,6 +217,18 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture(params=["local", "spark"])
+def graph_path(request, monkeypatch):
+    """Run a connected-components test on both paths of
+    ``operators.dedup``: the driver-local kernel (the default at test
+    sizes) and the Spark rounds (local bound forced to 0)."""
+    if request.param == "spark":
+        from etl_deltalake_spark.operators import dedup
+
+        monkeypatch.setattr(dedup, "_LOCAL_GRAPH_MAX_EDGES", 0)
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -135,11 +135,11 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(country" in plan
 
 
-def test_alternating_components_equals_label_propagation(spark):
+def test_alternating_components_equals_label_propagation(spark, graph_path):
     """The alternating (large-star/small-star) connected components
     must produce exactly label propagation's (doc, cluster=min id)
     output on assorted graph shapes — two independent algorithms,
-    one truth."""
+    one truth — on the driver-local path and on the Spark rounds."""
     from etl_deltalake_spark.operators.dedup import (
         alternating_components,
         label_propagation_clusters,
@@ -164,12 +164,17 @@ def test_alternating_components_equals_label_propagation(spark):
         assert alt == lp, pairs
 
 
-def test_alternating_components_logarithmic_rounds_on_chains(spark):
+def test_alternating_components_logarithmic_rounds_on_chains(
+    spark, graph_path
+):
     """The scale claim: a 200-node chain has diameter 200 — min-label
     propagation needs ~200 rounds (and is provably NOT converged
     after 12), while the alternating algorithm must finish within a
     12-round budget (O(log² n) contraction regardless of diameter)
-    and still produce the exact components."""
+    and still produce the exact components. The round budget binds on
+    the Spark path (``graph_path == "spark"``); the local path must
+    give the same rows, and its 12 label-propagation rounds must stay
+    as unconverged as the Spark ones."""
     from etl_deltalake_spark.operators.dedup import (
         alternating_components,
         label_propagation_clusters,
