@@ -1271,7 +1271,8 @@ def alternating_components(
     set with a checkpoint to truncate lineage; the convergence test
     (edge-set equality) is one anti-join over the checkpointed edges.
 
-    Returns (doc, cluster). ``max_rounds`` is a safety rail, not a
+    Returns nullable long (doc, cluster) on both paths, whatever the
+    ids' nullability. ``max_rounds`` is a safety rail, not a
     tuning knob — convergence raises past it (Spark rounds only).
     """
     probe = (
@@ -1284,24 +1285,19 @@ def alternating_components(
     )
     tab = _small_graph(probe)
     if tab is not None:
-        # the Spark rounds' output is nullable once a round ran
-        nullable = tab.num_rows > 0 or all(f.nullable for f in probe.schema)
-        return _local_min_labels(pairs.sparkSession, tab, nullable, None)
+        # nullable, as the Spark rounds' min and explode make it
+        return _local_min_labels(pairs.sparkSession, tab, True, None)
     edges = (
         probe.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()
-        # LAZY checkpoint + one count (round 15): materialization,
-        # the emptiness test and the convergence-witness seed share a
-        # single job (was eager-checkpoint + isEmpty + count — three).
+        # LAZY checkpoint + one count (round 15): materialization and
+        # the convergence-witness seed share a single job. Never
+        # empty: the collect above found more pairs than the bound.
         .localCheckpoint(eager=False)
     )
     prev_count = edges.count()
-    if prev_count == 0:
-        return edges.select(
-            F.col("u").alias("doc"), F.col("v").alias("cluster")
-        )
     for _ in range(max_rounds):
         # ---- large-star: group the full neighborhood at every node
         adj = edges.unionByName(

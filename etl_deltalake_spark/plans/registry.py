@@ -380,13 +380,13 @@ RETIRED_R12: tuple[str, ...] = (
 # driver rows.
 # q_dv_cdf → q_cdf_spec: the identical DML script (initial load +
 # merge-on-read DELETE + merge-on-read UPDATE over the same source)
-# is graded through the SPEC reader (read_delta_cdf over cdc actions
-# recorded at write time) instead of VersionedTable's table_changes
-# derivation — strictly more external-reader surface per row. The
-# derivation path keeps its own driver-independent gates:
+# is graded through the SPEC reader over cdc actions recorded at
+# write time instead of the mask-delta derivation of a table written
+# without CDF. Both are read_delta_cdf (table_changes reads through
+# it); the derivation keeps its own driver-independent gates:
 # tests/test_dv_scale.py::test_large_mask_cdf_no_driver_positions
-# drives table_changes over a >1M-position DV commit, and the
-# q_dv_cdf oracle stays pytest-gated like every retiree.
+# drives it over a >1M-position DV commit, and the q_dv_cdf oracle
+# stays pytest-gated like every retiree.
 # q_sessionize → q_clone_read: every operator in the sessionize plan
 # already holds a driver row — grouped lag + running sum is exactly
 # q_gold_window's graded shape, the rollup half is q_grouping_sets,

@@ -13,7 +13,8 @@ spec ``_delta_log``, reshaped to the VersionedTable contract:
   table streams the change rows it recorded under ``_change_data/``
   (a deletion-vector commit never re-emits its surviving rows); an
   overwrite streams its post-image; a deletion-vector commit on a
-  table without CDF refuses, naming ``delta.enableChangeDataFeed``;
+  table without CDF refuses, naming ``delta.enableChangeDataFeed``
+  (``read_changes`` derives that commit's rows from its mask delta);
 - ``dataChange=false`` commits (compaction) stream nothing;
 - column-mapped tables stream under their logical names.
 

@@ -1830,7 +1830,7 @@ def dv_mask(df, fp_col: str, ri_col: str, descs: dict, table_path: str,
 
 
 def _scan_with_dv(spark, schema, abs_paths, descs, table_path,
-                  base_path=None):
+                  base_path=None, prior=None):
     """Scan parquet files masking DV-deleted rows: files without a DV
     take the plain fast path; files with one read alongside
     ``_metadata.row_index`` (Spark's native per-file row position)
@@ -1839,7 +1839,12 @@ def _scan_with_dv(spark, schema, abs_paths, descs, table_path,
     ``_DV_BROADCAST_MAX`` total positions, executor-side decode
     above it (nothing O(deleted rows) on the driver there).
     ``descs`` maps scheme-normalized absolute file path → the add's
-    ``deletionVector`` descriptor dict."""
+    ``deletionVector`` descriptor dict.
+
+    ``prior`` (keyed like ``descs``) turns the scan into a mask
+    DELTA: only the rows ``descs`` masks and ``prior`` does not —
+    what a commit that swapped ``prior`` for ``descs`` deleted (every
+    file then needs a descriptor in ``descs``)."""
     from pyspark.sql import functions as F
 
     def reader():
@@ -1867,16 +1872,74 @@ def _scan_with_dv(spark, schema, abs_paths, descs, table_path,
                 F.col("_metadata.row_index").alias("__dv_ri"),
             )
         )
-        live = {_norm_uri(p): descs[_norm_uri(p)] for p in dvd}
-        parts.append(
-            dv_mask(
-                df, "__dv_fp", "__dv_ri", live, table_path, keep="live"
-            ).drop("__dv_fp", "__dv_ri")
-        )
+        keys = [_norm_uri(p) for p in dvd]
+        mask = {k: descs[k] for k in keys}
+        if prior is None:
+            df = dv_mask(df, "__dv_fp", "__dv_ri", mask, table_path,
+                         keep="live")
+        else:
+            # masks compose: in the new mask, then not in the old one
+            df = dv_mask(df, "__dv_fp", "__dv_ri", mask, table_path,
+                         keep="deleted")
+            old = {k: prior[k] for k in keys if k in prior}
+            if old:
+                df = dv_mask(df, "__dv_fp", "__dv_ri", old, table_path,
+                             keep="live")
+        parts.append(df.drop("__dv_fp", "__dv_ri"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+# Reader table features every log reader (``read_delta``,
+# ``read_delta_cdf`` and the ``deltastream`` source) serves.
+_READER_FEATURES_OK = frozenset({
+    "deletionVectors",
+    "columnMapping",
+    # timestampNtz: the schema's timestamp_ntz columns map onto
+    # Spark's native TIMESTAMP_NTZ parquet read
+    "timestampNtz",
+    # v2Checkpoint: named manifests + sidecars, resolved by the
+    # checkpoint reader during snapshot replay
+    "v2Checkpoint",
+    # variantType: schema variant columns map onto Spark 4's native
+    # VariantType parquet read (GA and preview feature names)
+    "variantType",
+    "variantType-preview",
+    # typeWidening: files written before a widen carry narrower
+    # parquet types; every read here projects the log's metaData
+    # schema, and Spark 4's parquet readers perform the spec's
+    # widening promotions (int→long/double, float→double,
+    # int→decimal) at scan time — pinned by the foreign-fixture test
+    "typeWidening",
+    "typeWidening-preview",
+    # vacuumProtocolCheck: constrains VACUUM writers only; the spec
+    # sets no reader requirement
+    "vacuumProtocolCheck",
+})
+
+
+def check_reader_protocol(table_path: str, snap: dict) -> None:
+    """Refuse a snapshot whose protocol needs a reader this repo is
+    not: minReaderVersion above 3, or (at 3, table features) a reader
+    feature outside ``_READER_FEATURES_OK``. Version 2 is the legacy
+    column-mapping tier, which every reader serves. HONEST refusal,
+    never a silent misread: an unknown reader feature changes what
+    the data files MEAN."""
+    proto = snap.get("protocol") or {}
+    mrv = int(proto.get("minReaderVersion", 1))
+    if mrv < 3:
+        return
+    unsupported = sorted(
+        set(proto.get("readerFeatures") or []) - _READER_FEATURES_OK
+    )
+    if unsupported or mrv > 3:
+        raise ValueError(
+            f"{table_path} requires unsupported reader features "
+            f"{unsupported or mrv} — ignoring them would change "
+            "what the data files mean"
+        )
 
 
 def read_delta(
@@ -1944,8 +2007,6 @@ def read_delta(
     snap = delta_snapshot(spark, table_path, version=version)
     if snap["version"] < 0:
         raise ValueError(f"{table_path} has no _delta_log")
-    proto = snap.get("protocol") or {}
-    mrv = int(proto.get("minReaderVersion", 1))
     cm_mode = (snap.get("configuration") or {}).get(
         "delta.columnMapping.mode", "none"
     )
@@ -1954,45 +2015,7 @@ def read_delta(
             f"{table_path}: unknown delta.columnMapping.mode "
             f"{cm_mode!r}"
         )
-    if mrv >= 3:
-        feats = set(proto.get("readerFeatures") or [])
-        unsupported = sorted(
-            feats
-            - {
-                "deletionVectors",
-                "columnMapping",
-                # timestampNtz: the schema's timestamp_ntz columns map
-                # onto Spark's native TIMESTAMP_NTZ parquet read
-                "timestampNtz",
-                # v2Checkpoint: named manifests + sidecars, resolved
-                # by the checkpoint reader during snapshot replay
-                "v2Checkpoint",
-                # variantType: schema variant columns map onto
-                # Spark 4's native VariantType parquet read (GA and
-                # preview feature names)
-                "variantType",
-                "variantType-preview",
-                # typeWidening: files written before a widen carry
-                # narrower parquet types; every read here projects
-                # the log's metaData schema, and Spark 4's parquet
-                # readers perform the spec's widening promotions
-                # (int→long/double, float→double, int→decimal) at
-                # scan time — pinned by the foreign-fixture test
-                "typeWidening",
-                "typeWidening-preview",
-                # vacuumProtocolCheck: constrains VACUUM writers
-                # only; the spec sets no reader requirement
-                "vacuumProtocolCheck",
-            }
-        )
-        if unsupported or mrv > 3:
-            # HONEST refusal, never a silent misread: an unknown
-            # reader feature changes what the data files MEAN.
-            raise ValueError(
-                f"{table_path} requires unsupported reader features "
-                f"{unsupported or mrv} — ignoring them would change "
-                "what the data files mean"
-            )
+    check_reader_protocol(table_path, snap)
     if cm_mode == "id":
         # Spark's field-id matching is gated by a session conf read
         # at SCAN time; it only applies to read schemas that carry
@@ -2454,9 +2477,12 @@ def ranges_from_condition(spark: SparkSession, condition: str) -> dict:
     return {c: (lo, hi) for c, (lo, hi) in out.items()}
 
 
-def _partition_value_typed(raw: str, ddl_type: str):
-    """PROTOCOL.md partition-value string → typed Python value (the
-    batch twin of delta_stream._partition_value)."""
+def _partition_value_typed(raw: str | None, ddl_type: str):
+    """PROTOCOL.md partition-value string → typed Python value ("Partition
+    Value Serialization"; ``None`` or ``""`` is null) — the one parser
+    for the stats pruner and the ``deltastream`` workers."""
+    if raw is None or raw == "":
+        return None
     t = ddl_type.lower()
     if t in ("tinyint", "smallint", "int", "integer", "bigint", "long"):
         return int(raw)
@@ -2477,6 +2503,96 @@ def _partition_value_typed(raw: str, ddl_type: str):
     return raw
 
 
+# integer digits each integer type needs, for typeWidening's
+# integer → integer / decimal promotions
+_INT_DIGITS = {"tinyint": 3, "smallint": 5, "int": 10, "bigint": 20}
+
+
+def _reads_as(old, new) -> bool:
+    """Whether parquet data written as type ``old`` scans as ``new``:
+    the same type, a struct/array/map of such (struct fields matched
+    by name, added or dropped fields allowed), or one of Delta
+    typeWidening's promotions, which Spark's parquet reader performs
+    at scan time. Nullability and field metadata are ignored."""
+    from pyspark.sql import types as T
+
+    if isinstance(old, T.StructType) and isinstance(new, T.StructType):
+        have = {f.name: f.dataType for f in new.fields}
+        return all(
+            f.name not in have or _reads_as(f.dataType, have[f.name])
+            for f in old.fields
+        )
+    if isinstance(old, T.ArrayType) and isinstance(new, T.ArrayType):
+        return _reads_as(old.elementType, new.elementType)
+    if isinstance(old, T.MapType) and isinstance(new, T.MapType):
+        return _reads_as(old.keyType, new.keyType) and _reads_as(
+            old.valueType, new.valueType
+        )
+    if old == new:
+        return True
+    o, n = old.simpleString(), new.simpleString()
+    if o in _INT_DIGITS:
+        if n in _INT_DIGITS:
+            return _INT_DIGITS[n] >= _INT_DIGITS[o]
+        if isinstance(new, T.DecimalType):
+            return new.precision - new.scale >= _INT_DIGITS[o]
+        return n == "double" and o != "bigint"
+    if isinstance(old, T.DecimalType) and isinstance(new, T.DecimalType):
+        return new.scale >= old.scale and (
+            new.precision - new.scale >= old.precision - old.scale
+        )
+    return (o, n) in (("float", "double"), ("date", "timestamp_ntz"))
+
+
+def _check_cdf_layouts(spark, table_path, snap, from_version, to_version,
+                       metas) -> None:
+    """Refuse a change feed over ``(from_version, to_version]`` whose
+    files were written under other partition columns, or a column
+    type that does not widen to the latest one, than the latest
+    schema ``read_delta_cdf`` scans them under: their partition
+    columns would read as null or their scan would fail. delta-spark
+    blocks such batch reads too. ``metas`` maps each version after
+    ``from_version`` to the metaData it commits; with none, every
+    file in the window was written under the latest metaData."""
+    from pyspark.sql.types import StructType
+
+    if not metas:
+        return
+
+    def layout(schema_json, part_cols, conf):
+        # partition columns and column types, both by physical name
+        logical = StructType.fromJson(json.loads(schema_json))
+        phys = _cm_physical_type(
+            logical, (conf or {}).get("delta.columnMapping.mode", "none")
+        )
+        names = dict(zip(logical.names, phys.names))
+        return [names[c] for c in part_cols], phys
+
+    olds = {
+        v: layout(m["schemaString"], m.get("partitionColumns") or [],
+                  m.get("configuration"))
+        for v, m in metas.items()
+        if v <= to_version
+    }
+    if from_version >= 0:
+        s = delta_snapshot(spark, table_path, version=from_version)
+        olds[from_version] = layout(
+            s["schema_json"], s["partition_columns"], s["configuration"]
+        )
+    want_parts, want = layout(
+        snap["schema_json"], snap["partition_columns"],
+        snap["configuration"],
+    )
+    for v, (parts, have) in sorted(olds.items()):
+        if parts != want_parts or not _reads_as(have, want):
+            raise ValueError(
+                f"{table_path}: version {v}'s files have other partition "
+                "columns or column types than the latest schema, which "
+                "the change feed reads every file under — read changes "
+                "from after the table's last such change"
+            )
+
+
 def read_delta_cdf(
     spark: SparkSession,
     table_path: str,
@@ -2495,19 +2611,28 @@ def read_delta_cdf(
     - a commit carrying ``cdc`` actions serves THEM verbatim (the
       ``_change_data`` parquet files hold the change rows plus
       ``_change_type``) — O(changes) however big the touched files;
-    - no cdc + dataChange adds → every added row is ``insert``;
+    - no cdc + dataChange adds → their live rows are ``insert``;
     - no cdc + full-file removes → the removed files' rows are
       ``delete`` (files must not be vacuumed yet, same as Delta);
       a commit with BOTH serves adds-as-insert plus
       removes-as-delete — delta-spark's CDCReader derivation for
       plain ``INSERT OVERWRITE`` on a CDF table, which writes no
       cdc files (round 13, was a refusal);
-    - no cdc + a deletion-vector re-add REFUSES honestly: the
-      per-row change set is not derivable without re-running the
-      DML — enable CDF at write time.
+    - no cdc + a file removed and re-added with another deletion
+      vector, or none (merge-on-read DML, RESTORE) → the rows in the
+      add's mask and not in the remove's (which carries the old
+      descriptor; no descriptor is an empty mask): ``delete``, or
+      ``update_preimage`` when the commit also adds fresh files,
+      whose rows are then ``update_postimage``; rows the old mask
+      held and the new one drops (a RESTORE) come back labelled like
+      the fresh rows. This is the one batch derivation:
+      ``VersionedTable.table_changes`` reads through it.
 
     Columns resolve under the LATEST schema (delta-spark's default);
-    column-mapped tables scan by physical name and alias back.
+    column-mapped tables scan by physical name and alias back. A
+    window whose files were written under other partition columns or
+    an unwidenable column type refuses (``_check_cdf_layouts``). The
+    latest protocol is checked like ``read_delta``'s.
 
     Timestamp bounds (round 13, delta-spark's readChangeFeed
     ``startingTimestamp`` / ``endingTimestamp``): the start resolves
@@ -2516,6 +2641,7 @@ def read_delta_cdf(
     mutually exclusive with the corresponding version bound.
     """
     import json as _json
+    from urllib.parse import unquote as _unquote
 
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -2550,6 +2676,7 @@ def read_delta_cdf(
             spark, table_path, ending_timestamp
         )
     snap = delta_snapshot(spark, table_path)
+    check_reader_protocol(table_path, snap)
     tip = snap["version"]
     to_version = tip if to_version is None else to_version
     if not from_version <= to_version <= tip:
@@ -2573,46 +2700,42 @@ def read_delta_cdf(
     phys_data = _cm_physical_type(data_schema, cm_mode)
     ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
 
-    def scan(entries, change_lit: str | None, version: int, millis: int,
-             dvs: dict | None = None):
-        """entries: [(path, partitionValues dict)] — read under the
-        physical data schema (+ _change_type when stored in-file),
-        inject partition literals, alias to logical, tag commit
-        columns. Groups by partition tuple like read_delta. ``dvs``
-        (scheme-normalized abs path → deletionVector descriptor)
-        masks files that were PARTIALLY deleted before this commit —
-        a remove of a DV-carrying file changes only its live rows
-        (round 13)."""
+    def scan(acts, change_lit: str | None, version: int, millis: int,
+             dvs: dict | None = None, prior: dict | None = None):
+        """acts: add/remove/cdc action dicts — read under the physical
+        data schema (+ _change_type when stored in-file), inject
+        partition literals, alias to logical, tag commit columns.
+        Groups by partition tuple like read_delta. ``dvs`` and
+        ``prior`` (scheme-normalized abs path → deletionVector
+        descriptor) go to ``_scan_with_dv``: ``dvs`` alone keeps the
+        files' live rows, both keep the rows ``dvs`` masks and
+        ``prior`` does not."""
         ddl = phys_data
         if change_lit is None:  # cdc files store _change_type
             ddl = StructType(
                 [*phys_data.fields]
             ).add("_change_type", "string")
         groups: dict[tuple, list[str]] = {}
-        for path, pv in entries:
+        for a in acts:
+            # spec removes MAY omit partitionValues; hive-layout paths
+            # still carry them — decoded from the SPEC-encoded path
+            # first, else `a%2520b` style values come back one decode
+            # level wrong (round 13)
+            pv = a.get("partitionValues") or partition_values_from_path(
+                _unquote(a["path"])
+            )
             key = tuple(pv.get(phys_of[c]) for c in pcols)
             groups.setdefault(key, []).append(
-                resolve_add_path(table_path, path)
+                resolve_add_path(table_path, a["path"])
             )
         out = None
         for key, paths in sorted(
             groups.items(),
             key=lambda kv: tuple((v is None, v or "") for v in kv[0]),
         ):
-            part = spark.read.schema(ddl).parquet(*paths)
-            if dvs and any(_norm_uri(p) in dvs for p in paths):
-                part = dv_mask(
-                    part.select(
-                        "*",
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"),
-                            r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+",
-                            "/",
-                        ).alias("__dv_fp"),
-                        F.col("_metadata.row_index").alias("__dv_ri"),
-                    ),
-                    "__dv_fp", "__dv_ri", dvs, table_path, keep="live",
-                ).drop("__dv_fp", "__dv_ri")
+            part = _scan_with_dv(
+                spark, ddl, paths, dvs or {}, table_path, prior=prior
+            )
             part = part.select(
                 *[
                     F.col(pf.name).cast(lf.dataType).alias(lf.name)
@@ -2641,8 +2764,21 @@ def read_delta_cdf(
             F.lit(millis).cast("long").alias("_commit_timestamp"),
         )
 
+    def path_key(a):
+        return _norm_uri(resolve_add_path(table_path, a["path"]))
+
+    def descs(acts):
+        return {
+            path_key(a): a["deletionVector"]
+            for a in acts
+            if a.get("deletionVector")
+        }
+
     by_version: dict[int, list[dict]] = {}
+    metas: dict[int, dict] = {}
     for v, a in delta_log_actions(spark, table_path, from_version + 1):
+        if a.get("metaData") is not None:
+            metas[v] = a["metaData"]
         if from_version < v <= to_version:
             by_version.setdefault(v, []).append(a)
     missing = sorted(
@@ -2653,6 +2789,8 @@ def read_delta_cdf(
             f"{table_path}: commit files {missing} were removed by log "
             "retention — CDF cannot be read below the retention floor"
         )
+    _check_cdf_layouts(spark, table_path, snap, from_version, to_version,
+                       metas)
     parts = []
     for v in sorted(by_version):
         actions = by_version[v]
@@ -2678,70 +2816,42 @@ def read_delta_cdf(
             and a["remove"].get("dataChange", True)
         ]
         if cdcs:
-            parts.append(
-                scan(
-                    [
-                        (c["path"], c.get("partitionValues") or {})
-                        for c in cdcs
-                    ],
-                    None,
-                    v,
-                    millis,
-                )
-            )
+            parts.append(scan(cdcs, None, v, millis))
             continue
         if not adds and not removes:
             continue  # OPTIMIZE / metadata-only
-        if any(a.get("deletionVector") for a in adds):
-            raise ValueError(
-                f"{table_path}: version {v} re-masks files without cdc "
-                "actions — enable delta.enableChangeDataFeed at write "
-                "time"
-            )
-        if adds:
-            parts.append(
-                scan(
-                    [
-                        (a["path"], a.get("partitionValues") or {})
-                        for a in adds
-                    ],
-                    "insert",
-                    v,
-                    millis,
-                )
-            )
-        if removes:
-            from urllib.parse import unquote as _unquote
-
-            parts.append(
-                scan(
-                    [
-                        (
-                            r["path"],
-                            # spec removes MAY omit partitionValues;
-                            # hive-layout paths still carry them —
-                            # decoded from the SPEC-encoded path
-                            # first, else `a%2520b` style values come
-                            # back one decode level wrong (round 13)
-                            r.get("partitionValues")
-                            or partition_values_from_path(
-                                _unquote(r["path"])
-                            ),
-                        )
-                        for r in removes
-                    ],
-                    "delete",
-                    v,
-                    millis,
-                    dvs={
-                        _norm_uri(
-                            resolve_add_path(table_path, r["path"])
-                        ): r["deletionVector"]
-                        for r in removes
-                        if r.get("deletionVector")
-                    },
-                )
-            )
+        new, old = descs(adds), descs(removes)
+        # a file removed and re-added changed only its mask (a missing
+        # descriptor is an empty one); every other add is fresh, every
+        # other remove gone (its live rows are deleted)
+        readded = {path_key(a) for a in adds} & {
+            path_key(r) for r in removes
+        }
+        fresh = [a for a in adds if path_key(a) not in readded]
+        gone = [r for r in removes if path_key(r) not in readded]
+        remasked = [
+            a for a in adds
+            if path_key(a) in readded
+            and new.get(path_key(a)) != old.get(path_key(a))
+        ]
+        is_update = bool(remasked) and bool(fresh)
+        post = "update_postimage" if is_update else "insert"
+        if fresh:
+            parts.append(scan(fresh, post, v, millis, dvs=new))
+        if gone:
+            parts.append(scan(gone, "delete", v, millis, dvs=old))
+        # rows the new mask adds were deleted (or rewritten into the
+        # fresh files); rows it drops from the old mask (a RESTORE)
+        # came back
+        masked = [a for a in remasked if path_key(a) in new]
+        if masked:
+            parts.append(scan(
+                masked, "update_preimage" if is_update else "delete",
+                v, millis, dvs=new, prior=old,
+            ))
+        unmasked = [a for a in remasked if path_key(a) in old]
+        if unmasked:
+            parts.append(scan(unmasked, post, v, millis, dvs=old, prior=new))
     if not parts:
         base = read_delta(spark, table_path).limit(0)
         return base.select(

@@ -91,33 +91,6 @@ def _commits_after(root: str, lo: int) -> dict[int, list[dict]]:
     return out
 
 
-_READER_FEATURES_OK = {
-    "columnMapping",
-    "deletionVectors",
-    "timestampNtz",
-    "v2Checkpoint",
-    "typeWidening",
-    "typeWidening-preview",
-    "vacuumProtocolCheck",
-    "variantType",
-    "variantType-preview",
-}
-
-
-def _check_protocol(root: str, snap: dict) -> None:
-    # minReaderVersion 2 = legacy column-mapping tier (supported
-    # since round 12); 3 = table features, each checked by name
-    proto = snap.get("protocol") or {}
-    mrv = int(proto.get("minReaderVersion", 1))
-    feats = set(proto.get("readerFeatures") or []) if mrv >= 3 else set()
-    unsupported = sorted(feats - _READER_FEATURES_OK)
-    if unsupported or mrv > 3:
-        raise ValueError(
-            f"{root} requires unsupported reader features "
-            f"{unsupported or mrv}"
-        )
-
-
 def _dv_positions_py(root: str, desc: dict) -> set[int]:
     """Worker-side descriptor resolve — delegates to the shared
     ``dv_blob`` resolver (round 12) so the sidecar-format version,
@@ -130,26 +103,6 @@ def _dv_positions_py(root: str, desc: dict) -> set[int]:
     )
 
     return set(_dv_decode_checked(dv_blob(desc, root, _local_read), desc))
-
-
-def _partition_value(raw: str | None, ddl_type: str):
-    """Spec partitionValues are strings; inject them as typed Python
-    values per the schema (the serialization rules of PROTOCOL.md
-    "Partition Value Serialization")."""
-    if raw is None or raw == "":
-        return None
-    t = ddl_type.lower()
-    if t in ("tinyint", "smallint", "int", "bigint", "long", "integer"):
-        return int(raw)
-    if t in ("float", "double"):
-        return float(raw)
-    if t == "boolean":
-        return raw == "true"
-    if t == "date":
-        import datetime
-
-        return datetime.date.fromisoformat(raw)
-    return raw
 
 
 def _pa_type_of(ddl_type: str):
@@ -386,14 +339,17 @@ class DeltaStreamReader(DataSourceStreamReader):
             and end["version"] > self._pos.get("version", -1)
         ):
             self._pos = {"version": end["version"], "initial": False}
-        from etl_deltalake_spark.sources.delta_log import delta_snapshot
+        from etl_deltalake_spark.sources.delta_log import (
+            check_reader_protocol,
+            delta_snapshot,
+        )
 
         hi = end["version"]
         parts: list[DeltaFilePartition] = []
         if start.get("initial"):
             # initial snapshot AS OF `hi` — all live files, masks on
             snap = delta_snapshot(None, self.root, version=hi)
-            _check_protocol(self.root, snap)
+            check_reader_protocol(self.root, snap)
             for a in snap["adds"]:
                 parts.append(
                     self._part(
@@ -403,7 +359,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                 )
             return parts
         lo = start["version"]
-        _check_protocol(self.root, delta_snapshot(None, self.root))
+        check_reader_protocol(self.root, delta_snapshot(None, self.root))
         commits = {
             v: a for v, a in _commits_after(self.root, lo).items() if v <= hi
         }
@@ -527,6 +483,10 @@ class DeltaStreamReader(DataSourceStreamReader):
     def read(self, part: DeltaFilePartition):
         import pyarrow.parquet as pq
 
+        from etl_deltalake_spark.sources.delta_log import (
+            _partition_value_typed,
+        )
+
         pf = pq.ParquetFile(part.path)
         sch = pf.schema_arrow
         # column-mapping resolution (round 12): id mode matches the
@@ -563,7 +523,7 @@ class DeltaStreamReader(DataSourceStreamReader):
             if src is not None:
                 specs.append((name, ddl_type, "col", table.column(src)))
             elif phys in part.partition_values:
-                val = _partition_value(
+                val = _partition_value_typed(
                     part.partition_values.get(phys), ddl_type
                 )
                 specs.append((name, ddl_type, "const", val))
@@ -618,7 +578,10 @@ class DeltaStreamDataSource(DataSource):
     def _table_fields(self) -> list[tuple]:
         from pyspark.sql.types import StructType
 
-        from etl_deltalake_spark.sources.delta_log import delta_snapshot
+        from etl_deltalake_spark.sources.delta_log import (
+            check_reader_protocol,
+            delta_snapshot,
+        )
 
         root = self.options.get("path", "")
         snap = delta_snapshot(None, root)
@@ -626,7 +589,7 @@ class DeltaStreamDataSource(DataSource):
             raise ValueError(f"{root} has no commits to stream")
         # fail at load(), not first batch: an unsupported protocol
         # means the declared schema would be wrong
-        _check_protocol(root, snap)
+        check_reader_protocol(root, snap)
         if snap["schema_json"] is None:
             raise ValueError("deltastream: table has no metaData action")
         struct = StructType.fromJson(json.loads(snap["schema_json"]))

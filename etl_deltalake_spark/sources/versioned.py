@@ -2206,8 +2206,10 @@ class VersionedTable:
         post-image (callers treating appends as inserts should check
         ``history()`` for intervening overwrites); a DML commit only
         the rows it rewrote or inserted — rows a deletion-vector
-        commit leaves in place are not changes. The same rows the
-        ``versionedcdf`` stream delivers.
+        commit leaves in place are not changes. On a ``cdf=True``
+        table these are the rows the ``versionedcdf`` stream delivers;
+        a deletion-vector commit without recorded changes, which the
+        stream refuses, is derived here from its mask delta.
         """
         return (
             self.table_changes(from_version, to_version)
@@ -2222,155 +2224,31 @@ class VersionedTable:
         every row changed by commits in ``(from_version, to_version]``
         tagged ``_change_type`` (``insert`` / ``delete`` /
         ``update_preimage`` / ``update_postimage``) and
-        ``_commit_version``. Where real Delta writers persist
-        ``_change_data`` files, this derives the identical rows from
-        the log itself — adds, removes, and deletion-vector DELTAS
-        (a file's new mask minus its previous mask is exactly the
-        rows that commit deleted):
-
-        - plain adds → ``insert``;
-        - files removed and not re-added → their pre-commit LIVE rows
-          (previous masks applied, previous schema) as ``delete`` —
-          an overwrite emits full pre-image deletes + post-image
-          inserts;
-        - a DV commit's mask-delta rows → ``delete``, or
-          ``update_preimage`` when the commit also adds rewritten
-          rows, which then come out as ``update_postimage``;
-        - ``dataChange=false`` (OPTIMIZE) commits emit nothing.
-
-        Cost is proportional to the CHANGED data (mask deltas are
-        broadcast semi-joins on ``_metadata.row_index``; only
-        overwrites touch whole files, as their change set IS the
-        whole file), never to table size times history."""
+        ``_commit_version``. It is ``delta_log.read_delta_cdf`` over
+        this table's log with the versions shifted to this table's
+        1-based numbering and ``_commit_timestamp`` dropped, so its
+        per-commit rule is the spec reader's: recorded ``cdc`` rows
+        verbatim, else adds as ``insert``, removed files' live rows as
+        ``delete``, and a deletion-vector commit's mask delta as
+        ``delete`` (``update_preimage`` beside rewritten
+        ``update_postimage`` rows); ``dataChange=false`` (OPTIMIZE)
+        commits emit nothing. Rows resolve under the latest schema; a
+        window whose files have other partition columns or column
+        types refuses."""
         from etl_deltalake_spark.sources import delta_log as DL
 
-        base_version, base, commits = self._log_views()
-        tip = commits[-1].version if commits else 0
+        tip = DL.log_tip(self.spark, self.path) + 1
         to_version = tip if to_version is None else to_version
         if not from_version <= to_version <= tip:
             raise ValueError(
                 f"need from_version <= to_version <= {tip}, "
                 f"got ({from_version}, {to_version})"
             )
-        if from_version < base_version:
-            raise ValueError(
-                f"{self.path}: changes since version {from_version} are "
-                f"gone — log retention keeps versions after "
-                f"{base_version}"
-            )
-
-        def _tag(df, kind, version):
-            return df.select(
-                "*",
-                F.lit(kind).alias("_change_type"),
-                F.lit(version).cast("long").alias("_commit_version"),
-            )
-
-        parts: list[DataFrame] = []
-        live: dict[str, str | None] = dict(base)
-        prev_c: Commit | None = None
-        for c in commits:
-            if c.version <= base_version:
-                prev_c = c
-                continue
-            pre_live = dict(live)
-            for f in c.remove:
-                live.pop(f, None)
-            dvd = dict(c.dv)
-            for f in c.add:
-                live[f] = dvd.get(f)
-            in_window = (
-                from_version < c.version <= to_version and c.data_change
-            )
-            if not in_window:
-                prev_c = c
-                continue
-            if c.cdc:
-                # the commit RECORDED its change rows (round 12 CDF
-                # capture): serve them verbatim — O(changes) read,
-                # no re-scan, no mask-delta derivation
-                parts.append(
-                    self._cdc_scan(c).select(
-                        "*",
-                        F.lit(c.version).cast("long").alias(
-                            "_commit_version"
-                        ),
-                    )
-                )
-                prev_c = c
-                continue
-            readded = set(c.add)
-            # files whose mask this commit CHANGED — decided from
-            # descriptor inequality alone, no decode (round 12)
-            changed = {
-                rel: desc
-                for rel, desc in dvd.items()
-                if desc != pre_live.get(rel)
-            }
-            fresh = [f for f in c.add if f not in dvd]
-            gone = [
-                f for f in c.remove if f not in readded and f in pre_live
-            ]
-            is_update = bool(changed) and bool(fresh)
-            if gone:
-                pre_dvs = {
-                    f: pre_live[f] for f in gone if pre_live.get(f)
-                }
-                parts.append(
-                    _tag(
-                        self._logical_scan(
-                            [f"{self.path}/{f}" for f in gone],
-                            pre_dvs,
-                            prev_c if prev_c is not None else c,
-                        ),
-                        "delete",
-                        c.version,
-                    )
-                )
-            if changed:
-                # rows NEWLY masked by this commit = in the new mask,
-                # not in the old one: ``dv_mask`` keeps the new mask's
-                # rows, then drops the old mask's (each picks its
-                # broadcast or executor-side form from cardinality)
-                scan = self._scan_with_position(
-                    [f"{self.path}/{f}" for f in changed], {}, c
-                )
-                hit = DL.dv_mask(
-                    scan, "__fp", "__ri", self._dv_descs(changed),
-                    self.path, keep="deleted",
-                )
-                old = {f: pre_live[f] for f in changed if pre_live.get(f)}
-                if old:
-                    hit = DL.dv_mask(
-                        hit, "__fp", "__ri", self._dv_descs(old),
-                        self.path, keep="live",
-                    )
-                hit = hit.drop("__fp", "__ri")
-                parts.append(
-                    _tag(
-                        hit,
-                        "update_preimage" if is_update else "delete",
-                        c.version,
-                    )
-                )
-            if fresh:
-                parts.append(
-                    _tag(
-                        self._logical_scan(
-                            [f"{self.path}/{f}" for f in fresh], {}, c
-                        ),
-                        "update_postimage" if is_update else "insert",
-                        c.version,
-                    )
-                )
-            prev_c = c
-        if not parts:
-            base = self.read(version=to_version).limit(0)
-            return _tag(base, "insert", 0).limit(0)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return DL.read_delta_cdf(
+            self.spark, self.path, from_version - 1, to_version - 1
+        ).withColumn(
+            "_commit_version", F.col("_commit_version") + 1
+        ).drop("_commit_timestamp")
 
     def history(self) -> list[dict]:
         """Commit metadata, newest first (Delta's DESCRIBE HISTORY):
@@ -2406,35 +2284,6 @@ class VersionedTable:
             "columnIds": dict(latest.column_ids),
             "maxColumnId": latest.max_column_id,
         }
-
-    def _cdc_scan(self, c: Commit) -> DataFrame:
-        """Read one commit's recorded ``_change_data`` files: physical
-        schema + the literal ``_change_type`` column, partition values
-        from the hive dirs (one shared basePath), logical names out —
-        the cdc twin of ``_logical_scan``."""
-        pairs = self._phys_pairs(c)
-        pb = set(c.partition_by)
-        phys_of = {n: p for n, p, _ in pairs}
-        data_ddl = ", ".join(
-            f"`{p}` {t}" for n, p, t in pairs if n not in pb
-        )
-        part_ddl = ", ".join(
-            f"`{phys_of[n]}` {t}"
-            for n, _p, t in pairs
-            if n in pb
-        )
-        ddl = ", ".join(
-            x for x in (data_ddl, "`_change_type` string", part_ddl) if x
-        )
-        reader = self.spark.read.schema(ddl)
-        if c.partition_by:
-            reader = reader.option(
-                "basePath", f"{self.path}/{_CHANGE_DIR}"
-            )
-        df = reader.parquet(*[f"{self.path}/{rel}" for rel in c.cdc])
-        return df.select(
-            *[F.col(p).alias(n) for n, p, _ in pairs], "_change_type"
-        )
 
     def _dv_descs(self, dvs: dict[str, str]) -> dict[str, dict]:
         """``dvs`` (table-relative path → descriptor JSON) keyed the way

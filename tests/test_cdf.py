@@ -5,10 +5,11 @@ tables write their DML change rows (+ ``_change_type``) under
 re-deriving them, and (b) ANY spec reader — here ``read_delta_cdf``,
 the in-repo twin of delta-spark's ``readChangeFeed`` — gets identical
 CDF from the log alone. Derivation rules for non-CDF commits
-(pure-add → insert, pure-remove → delete, rewrite → honest refusal)
-follow delta-spark. Reference analogue: the reference's Delta tables
-(main.py:414,465) gain CDF with one table property; this is that
-property."""
+(pure-add → insert, pure-remove → delete, deletion-vector re-mask →
+its mask delta) follow delta-spark; ``read_delta_cdf`` is the one
+derivation and ``table_changes`` reads through it. Reference
+analogue: the reference's Delta tables (main.py:414,465) gain CDF
+with one table property; this is that property."""
 
 from __future__ import annotations
 
@@ -83,21 +84,37 @@ def test_recorded_cdf_equals_derived_cdf(spark, pair):
 
 
 def test_spec_reader_serves_cdc_actions(spark, pair):
-    a, _ = pair
+    a, b = pair
     # the mirror carries spec cdc actions for every DML commit
     kinds = {
         v: {next(iter(x)) for x in acts}
         for v, acts in _group_actions(spark, a.path).items()
     }
     assert "cdc" in kinds[1] and "cdc" in kinds[2] and "cdc" in kinds[3]
-    # and a spec reader reconstructs the identical change feed
-    # (delta versions are 0-based: custom version V = delta V-1)
+    # a spec reader serves the feed from recorded cdc rows on ``a``
+    # and from mask deltas on ``b``; the only difference is the
+    # merge's not-matched insert, which a derivation labels
+    # update_postimage (delta versions are 0-based)
+    want = [
+        (0, "v0", "delete", 1), (3, "merged", "update_postimage", 3),
+        (3, "v3", "update_preimage", 3), (5, "v5", "delete", 1),
+        (7, "SEVEN", "update_postimage", 2),
+        (7, "v7", "update_preimage", 2), (10, "v10", "delete", 1),
+        (15, "v15", "delete", 1),
+    ]
+    for t, label in ((a, "insert"), (b, "update_postimage")):
+        got = sorted(
+            (r.id, r.val, r._change_type, r._commit_version)
+            for r in DL.read_delta_cdf(spark, t.path, 0).collect()
+        )
+        assert got == sorted(want + [(100, "new", label, 3)])
+    # table_changes is the same feed on 1-based versions
+    assert {
+        (r.id, r._commit_version)
+        for r in b.table_changes(3).collect()
+    } == {(3, 4), (100, 4)}
+    assert "_commit_timestamp" not in b.table_changes(3).columns
     spec = DL.read_delta_cdf(spark, a.path, 0)
-    got = sorted(
-        (r.id, r.val, r._change_type, r._commit_version + 1)
-        for r in spec.collect()
-    )
-    assert got == _changes(a.table_changes(1))
     # timestamps come from commitInfo (deterministic caller clock)
     ts = {
         r._commit_version: r._commit_timestamp for r in spec.collect()
@@ -112,7 +129,7 @@ def _group_actions(spark, path):
     return by
 
 
-def test_spec_reader_derives_insert_and_refuses_rewrites(spark, tmp_path):
+def test_spec_reader_derives_inserts_and_dv_deletes(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "nocdf"))
     t.write(_df(spark, [(1, "a")]), timestamp="2026-01-01T00:00:00")
     t.write(_df(spark, [(2, "b")]), mode="append",
@@ -123,11 +140,93 @@ def test_spec_reader_derives_insert_and_refuses_rewrites(spark, tmp_path):
         for r in DL.read_delta_cdf(spark, t.path, -1).collect()
     )
     assert got == [(1, "a", "insert", 0), (2, "b", "insert", 1)]
-    # a rewrite (DV delete) without CDF refuses honestly
+    # a DV delete without CDF derives from its mask delta
     t.delete_where(F.col("id") == 1, timestamp="2026-01-03T00:00:00",
                    use_dv=True)
-    with pytest.raises(ValueError, match="enableChangeDataFeed"):
-        DL.read_delta_cdf(spark, t.path, 1).collect()
+    got = [
+        (r.id, r.val, r._change_type, r._commit_version)
+        for r in DL.read_delta_cdf(spark, t.path, 1).collect()
+    ]
+    assert got == [(1, "a", "delete", 2)]
+
+
+def test_change_feed_refuses_unknown_reader_features(spark, tmp_path):
+    """A later protocol commit demanding an unknown reader feature
+    makes the change feed refuse, as ``read_delta`` does, instead of
+    serving rows whose meaning the feature may change."""
+    import json
+
+    t = VersionedTable(spark, str(tmp_path / "proto"))
+    t.write(_df(spark, [(1, "a")]), timestamp="2026-01-01T00:00:00")
+    with open(t._log_path(2).replace("file:", ""), "w") as f:
+        f.write(json.dumps({"protocol": {
+            "minReaderVersion": 3, "minWriterVersion": 7,
+            "readerFeatures": ["futureFeatureX"],
+            "writerFeatures": ["futureFeatureX"],
+        }}))
+    for read in (lambda: DL.read_delta_cdf(spark, t.path),
+                 lambda: t.table_changes(0)):
+        with pytest.raises(ValueError, match="futureFeatureX"):
+            read().collect()
+
+
+def test_restore_that_shrinks_a_mask_reinserts_the_unmasked_rows(
+    spark, tmp_path
+):
+    """RESTORE re-adds a file with its older, smaller mask: the rows
+    only the newer mask held come back as inserts, none is deleted."""
+    t = VersionedTable(spark, str(tmp_path / "rs"))
+    t.write(_df(spark, [(i, f"v{i}") for i in range(6)]),
+            timestamp="2026-01-01T00:00:00")
+    t.delete_where(F.col("id") == 1, timestamp="2026-01-02T00:00:00",
+                   use_dv=True)
+    t.delete_where(F.col("id").isin(2, 3), timestamp="2026-01-03T00:00:00",
+                   use_dv=True)
+    v = t.restore(2, timestamp="2026-01-04T00:00:00")
+    assert _changes(t.table_changes(v - 1, v)) == [
+        (2, "v2", "insert", v), (3, "v3", "insert", v),
+    ]
+    assert sorted(r.id for r in t.read().collect()) == [0, 2, 3, 4, 5]
+    # back to the version before any mask: the file is re-added
+    # without a deletion vector, and only the masked row comes back
+    v = t.restore(1, timestamp="2026-01-05T00:00:00")
+    assert _changes(t.table_changes(v - 1, v)) == [(1, "v1", "insert", v)]
+    assert sorted(r.id for r in t.read().collect()) == list(range(6))
+
+
+def test_change_feed_refuses_a_window_across_a_layout_change(
+    spark, tmp_path
+):
+    """Every file is read under the latest schema, so a window whose
+    files have other partition columns or another column type
+    refuses, where a scan would give null partition values or fail;
+    the window after the change reads."""
+    ddl = "id long, val string, k int"
+    cases = {
+        "unpartition": ({"partition_by": ["k"]}, {"partition_by": []},
+                        ddl),
+        "partition": ({}, {"partition_by": ["k"]}, ddl),
+        "retype": ({}, {}, "id long, val int, k int"),
+    }
+    for name, (first, then, ddl2) in cases.items():
+        t = VersionedTable(spark, str(tmp_path / name))
+        t.write(_df(spark, [(1, "1", 0)], ddl), mode="overwrite",
+                timestamp="2026-01-01T00:00:00", **first)
+        t.write(_df(spark, [(2, 2, 1)] if ddl2 != ddl else [(2, "2", 1)],
+                    ddl2),
+                mode="overwrite", timestamp="2026-01-02T00:00:00", **then)
+        t.write(_df(spark, [(3, 3, 1)] if ddl2 != ddl else [(3, "3", 1)],
+                    ddl2),
+                mode="append", timestamp="2026-01-03T00:00:00")
+        for read in (lambda: t.table_changes(0),
+                     lambda: t.read_changes(1, 2),
+                     lambda: DL.read_delta_cdf(spark, t.path)):
+            with pytest.raises(ValueError, match="version 0's files"):
+                read()
+        assert [
+            (r.id, r.k, r._change_type, r._commit_version)
+            for r in t.table_changes(2).collect()
+        ] == [(3, 1, "insert", 3)]
 
 
 def test_cow_delete_records_cdc_and_partitioned_layout(spark, tmp_path):
@@ -403,13 +502,10 @@ def test_cdf_timestamp_bounds_and_history(spark, tmp_path):
 
 
 def test_spec_and_custom_cdf_agree_on_full_script(spark, tmp_path):
-    """Two independent CDF implementations — the custom log's
-    table_changes (derives/serves from VersionedTable state) and the
-    spec read_delta_cdf (reconstructs from _delta_log cdc actions +
-    derivation) — must produce the SAME feed over one script
-    covering append, copy-on-write delete, merge-on-read update, and
-    a plain overwrite (custom versions are 1-based, the spec log
-    0-based)."""
+    """The change feed of one script covering append, copy-on-write
+    delete, merge-on-read update, and a plain overwrite, written out:
+    read_delta_cdf gives it on the log's 0-based versions and
+    table_changes on VersionedTable's 1-based ones."""
     t = VersionedTable(spark, str(tmp_path / "agree"), cdf=True)
     t.write(_df(spark, [(i, f"v{i}") for i in range(8)]),
             timestamp="2026-01-01T00:00:00")
@@ -420,6 +516,15 @@ def test_spec_and_custom_cdf_agree_on_full_script(spark, tmp_path):
                    timestamp="2026-01-04T00:00:00", use_dv=True)
     t.write(_df(spark, [(200, "y")]), mode="overwrite",
             timestamp="2026-01-05T00:00:00")
+    want = sorted(
+        [(i, f"v{i}", "insert", 0) for i in range(8)]
+        + [(100, "x", "insert", 1), (0, "v0", "delete", 2),
+           (1, "v1", "delete", 2), (5, "v5", "update_preimage", 3),
+           (5, "FIVE", "update_postimage", 3)]
+        + [(i, f"v{i}", "delete", 4) for i in (2, 3, 4, 6, 7)]
+        + [(5, "FIVE", "delete", 4), (100, "x", "delete", 4),
+           (200, "y", "insert", 4)]
+    )
     custom = sorted(
         (r.id, r.val, r._change_type, r._commit_version - 1)
         for r in t.table_changes(0).collect()
@@ -428,7 +533,7 @@ def test_spec_and_custom_cdf_agree_on_full_script(spark, tmp_path):
         (r.id, r.val, r._change_type, r._commit_version)
         for r in DL.read_delta_cdf(spark, t.path).collect()
     )
-    assert custom == spec
+    assert custom == spec == want
 
 
 def _drain_versionedcdf(spark, path, root):

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,6 +151,28 @@ def test_foreign_partitioned_table_injects_values(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     )
     assert rows == [(1, 7, 0), (2, 7, 0)]
+
+
+def test_decimal_partition_values_stream_as_read_delta_reads_them(
+    spark, vt, tmp_path
+):
+    """Partition values are strings in the log; a decimal one must
+    reach the stream as the decimal ``read_delta`` returns."""
+    vt.write(
+        spark.createDataFrame(
+            [(1, "0.50"), (2, "1.00"), (3, "1.00")], "id long, d string"
+        ).select("id", F.col("d").cast("decimal(5,2)").alias("d")),
+        mode="overwrite", partition_by=["d"],
+        timestamp="2026-01-01T00:00:00",
+    )
+    out, ckp = str(tmp_path / "out"), str(tmp_path / "ckp")
+    _drain(spark, vt.path, out, ckp)
+    want = sorted(tuple(r) for r in DL.read_delta(spark, vt.path).collect())
+    assert {d for _, d in want} == {Decimal("0.50"), Decimal("1.00")}
+    got = sorted(
+        (r.id, r.d) for r in spark.read.parquet(out).collect()
+    )
+    assert got == want
 
 
 def test_delete_only_commit_needs_ignore_deletes(spark, vt, tmp_path):

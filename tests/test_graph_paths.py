@@ -159,3 +159,26 @@ def test_small_graphs_cost_at_most_two_jobs(spark, sf_dir):
     n, lp = _jobs(spark, lambda: dedup.label_propagation_clusters(pairs))
     assert n <= 2, n
     assert "LocalTableScan" in lp._jdf.queryExecution().executedPlan().toString()
+
+
+def test_alternating_components_schema_is_nullable_without_edges(
+    spark, graph_path
+):
+    """Non-nullable ids whose pairs are all self-loops leave no edge:
+    the output schema is still the nullable (doc, cluster) a chain
+    over the same ids gets."""
+    from pyspark.sql import functions as F
+
+    ids = spark.range(5)
+    assert not ids.schema["id"].nullable
+    loops = ids.select(F.col("id").alias("doc_a"), F.col("id").alias("doc_b"))
+    chain = ids.select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    for pairs, rows in ((loops, []), (chain, [(i, 0) for i in range(6)])):
+        out = dedup.alternating_components(pairs)
+        assert _rows(out) == rows
+        assert [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in out.schema.fields] == [
+            ("doc", "bigint", True), ("cluster", "bigint", True),
+        ]

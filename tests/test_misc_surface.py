@@ -219,14 +219,14 @@ def test_casefold_inventory_outside_text_module():
         # sources/files.py precedent
         ("sources/http_source.py", '"false")).lower()'),
         # round-11 deltastream source: option strings and DDL type
-        # KEYWORDS (bigint/double/...), never data columns
-        ("sources/delta_stream.py", "t = ddl_type.lower()"),
-        # round-14 Arrow fast path: the same DDL-type-keyword lower in
+        # KEYWORDS (bigint/double/...), never data columns.
+        # Round-14 Arrow fast path: the DDL-type-keyword lower in
         # _pa_type_of (maps DDL tokens to Arrow types), never data
         ("sources/delta_stream.py", "t = ddl_type.strip().lower()"),
-        # round-13 stats pruning: the same DDL-type-keyword lower in
-        # delta_log._partition_value_typed (the batch twin of the
-        # line above), never data columns
+        # the same DDL-type-keyword lower in
+        # delta_log._partition_value_typed (the partition-value parser
+        # the stats pruner and the deltastream workers share), never
+        # data columns
         ("sources/delta_log.py", "t = ddl_type.lower()"),
         ("sources/delta_stream.py", '"skipChangeCommits", "false").lower()'),
         ("sources/delta_stream.py", '"ignoreDeletes", "false").lower()'),
